@@ -169,8 +169,8 @@ _R9_STALE = (
 #      entries (trigram_index_grep — the persisted-index grep,
 #      VERDICT task 5; indexed_lookup — the write_indexed consumer,
 #      task 6), every consumer of the restructured salted joins
-#      (_bucketed_self_join hot-key materialize + empty short-circuit;
-#      _bucketed_join analog), and every consumer of the graph loops
+#      (hot-key materialize + empty short-circuit, now in
+#      skew.bucketed_join), and every consumer of the graph loops
 #      whose fixpoint probes now ride the materialize action via
 #      Observation.
 #   2. top-up to 50 with the r10-stale cohort (latest driver artifact

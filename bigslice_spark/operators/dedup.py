@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoint import materialize
+from .skew import bucketed_join
 from .text import tokens
 
 # Mersenne-ish primes for the affine minhash family over a 31-bit domain —
@@ -71,129 +72,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
             .groupBy("h")
             .agg(F.min(id_col).alias(id_col),
                  F.count(F.lit(1)).alias("n_copies")))
-
-
-def _bucketed_self_join(rel: DataFrame, keys: list[str],
-                        id_col: str = "id",
-                        chunk_target: int = 2048,
-                        bn_col: str | None = None) -> DataFrame:
-    """Self-join ``rel`` with itself on ``keys``; non-key columns come back
-    suffixed ``_a`` / ``_b``. Output is identical to
-    ``rel ⋈_keys rel`` — but buckets larger than ``chunk_target`` rows
-    are salted so their quadratic pair output spreads across tasks.
-
-    Why AQE isn't enough: Spark's skew-join splitter triggers on join
-    INPUT partition bytes, while a degenerate LSH bucket (B near-identical
-    documents) has tiny input — B rows of ~24 bytes — and quadratic
-    OUTPUT (B² candidate rows), all produced by the single task that owns
-    that key (measured: a 2k-doc hot bucket never trips AQE at any
-    threshold because its input is ~48 KB). So the split must be explicit
-    and output-aware:
-
-    - bucket sizes (r14 optimization, guide §2.3/§2.4): the r9–r13
-      formulation counted them with an unordered COUNT window over the
-      bucket keys, on the reasoning that the window "rides the one
-      exchange on ``keys``". What that analysis missed is that the
-      window subtree hangs under BOTH join sides and Spark shares no
-      work between the two references: every input row was exchanged,
-      sorted and window-buffered TWICE before the join's own exchange
-      on ``keys + cells`` even started — 4 full exchanges + 2
-      WindowExec sorts of the relation per self-join (mirrored
-      Exchange→Sort→Window subtrees under both SMJ inputs,
-      plans/r14/ngram_jaccard_before.txt). Now ``bn_col`` names a
-      column of ``rel`` that already holds each row's bucket size —
-      the ngram/item path's document-frequency window count IS the
-      post-prune bucket size (df-pruning drops whole buckets, never
-      part of one), so those callers pay no counting pass at all —
-      and otherwise sizes come from a map-side-combined per-key
-      aggregate whose > ``chunk_target`` survivors (usually none)
-      broadcast back as a hot-key table with ``nc`` defaulting to 1
-      on the broadcast miss (the _bucketed_join pattern). The
-      aggregate's exchange carries ~one row per key after partial
-      aggregation; each side then pays exactly ONE full exchange —
-      the join's — and no WindowExec sort anywhere. The hot-key
-      table is MATERIALIZED before use (r15): as a lazy subtree it
-      hung under BOTH join sides, so the sizing pass over ``rel``
-      ran twice (plans/r14/dedup_simhash_after.txt nodes 5-14 vs
-      27-36 — Exchanges 10→14 vs the window form, and the
-      interpreted banding Generate ran 4× per query). Checkpointing
-      the ≤|hot keys| relation runs it once; and when it comes back
-      EMPTY — the common case, every bucket under ``chunk_target`` —
-      the salting short-circuits to the plain self-join, which is
-      bit-identical output (nc=1 everywhere is the identity
-      chunking) with zero broadcast/explode machinery in the plan;
-    - each member of a hot bucket gets a chunk ``c = hash(id) mod nc``
-      with ``nc = ceil(B / chunk_target)``; the left side replicates to
-      cells ``(c, j) ∀j``, the right to ``(i, c) ∀i``, and the join key
-      becomes ``keys + (ci, cj)`` — every ordered pair lands in EXACTLY
-      one cell ``(c_a, c_b)``, so no duplicates and no misses;
-    - per-cell work is bounded by ``chunk_target²`` pair rows regardless
-      of B; replication cost is 2·B·nc narrow rows, negligible next to
-      the B² join output that was already inherent to LSH.
-
-    Cold buckets take ``nc = 1`` — one cell, the original plan, two extra
-    int columns of overhead. (The reference has no analog: bigslice's
-    cogroup would funnel the whole bucket through one reducer,
-    reduce.go:1-40.)
-
-    The join is pinned to sort-merge (``hint("merge")``): if the
-    relation happens to fit the broadcast threshold, Catalyst would
-    broadcast one side — and then the probe side keeps its upstream
-    partitioning, so the hot bucket's entire B² output is produced by
-    the one task that owns its key and the cell spreading silently
-    does nothing. The hint is plan-neutral at corpus scale (a
-    self-join of a corpus-scale relation is sort-merge anyway —
-    measured at sf0.1) and forces the exchange on ``keys + cells``
-    exactly where the salting needs it."""
-    payload = [c for c in rel.columns if c not in keys and c != bn_col]
-    if bn_col is not None:
-        # coalesce: a NULL bucket size would make __nc__ NULL and the
-        # sequence-explode below silently DROP the row (missed pairs,
-        # no error) — internal callers pass never-NULL window counts,
-        # but the guard costs nothing (ADVICE r14)
-        salted = rel.withColumn(
-            "__nc__",
-            F.coalesce(
-                F.ceil(F.col(bn_col) / F.lit(float(chunk_target)))
-                .cast("int"), F.lit(1)))
-    else:
-        from ..checkpoint import materialize, release
-        hot = materialize(
-            rel.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bn__"))
-            .filter(F.col("__bn__") > chunk_target)
-            .select(*keys,
-                    F.ceil(F.col("__bn__")
-                           / F.lit(float(chunk_target)))
-                    .cast("int").alias("__nc__")))
-        if hot.isEmpty():
-            # no hot bucket anywhere: salting is the identity — run
-            # the plain (still merge-pinned) self-join with no salt
-            # columns, broadcast or explode in the plan at all
-            release(hot)
-            left = rel.select(
-                *keys, *[F.col(c).alias(c + "_a") for c in payload])
-            right = rel.select(
-                *keys, *[F.col(c).alias(c + "_b") for c in payload])
-            return left.hint("merge").join(right.hint("merge"),
-                                           on=list(keys))
-        salted = (rel.join(F.broadcast(hot), on=list(keys), how="left")
-                  .withColumn("__nc__",
-                              F.coalesce(F.col("__nc__"), F.lit(1))))
-    salted = salted.withColumn(
-        "__c__", F.pmod(F.xxhash64(F.col(id_col)),
-                        F.col("__nc__")).cast("int"))
-    chunks = F.explode(F.sequence(F.lit(0), F.col("__nc__") - 1))
-    left = salted.select(
-        *keys, *[F.col(c).alias(c + "_a") for c in payload],
-        F.col("__c__").alias("__ci__"), chunks.alias("__cj__"))
-    right = salted.select(
-        *keys, *[F.col(c).alias(c + "_b") for c in payload],
-        chunks.alias("__ci__"), F.col("__c__").alias("__cj__"))
-    return (left.hint("merge")
-            .join(right.hint("merge"),
-                  on=list(keys) + ["__ci__", "__cj__"])
-            .drop("__ci__", "__cj__"))
 
 
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str,
@@ -331,10 +209,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
       degenerate the bucket (a capped collect_list would silently miss
       duplicates exactly on the near-identical corpora dedup exists
       for). A B-member bucket costs B² join rows — inherent to LSH —
-      and _bucketed_self_join salts hot buckets so that cost spreads
-      across (B/chunk)² tasks. (AQE's skew splitter can NOT do this:
-      it triggers on join input bytes, and a degenerate bucket has
-      ~24·B bytes of input but B² of output.)
+      and skew.bucketed_join salts hot buckets so that cost spreads
+      across (B/chunk)² tasks (see the skew module for why AQE's
+      skew splitter cannot).
     - The band shuffle carries (id, band, bh) only — 24 bytes/row — not
       the 64-long signature (which would be amplified ×bands). Sigs are
       fetched once per SURVIVING pair by an id equi-join.
@@ -355,8 +232,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # default compresses it to 8 bytes with xxhash64 — same equivalence
     # classes minus a ~2^-64 collision, so same pairs.
     banded = _band_rows(sig, id_col, bands, rows_per_band, portable)
-    cand = (_bucketed_self_join(banded, ["band", "bh"],
-                                chunk_target=chunk_target)
+    cand = (bucketed_join(banded, keys=["band", "bh"],
+                          chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .distinct())
@@ -434,10 +311,9 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     ⇒ at least one band equal), then exact hamming verify via bit_count.
 
     Pair generation is an equi self-join on (band, bh) — NO bucket cap,
-    hot buckets salted (see _bucketed_self_join). The 8-byte fingerprint
-    rides the band rows
-    (×4 amplification of 8 bytes is noise), so the verify needs no
-    join-back."""
+    hot buckets salted by skew.bucketed_join. The 8-byte fingerprint
+    rides the band rows (×4 amplification of 8 bytes is noise), so the
+    verify needs no join-back."""
     sh = materialize(simhash64(df, text_col, id_col, portable), reliable)
     banded = sh.select(
         F.col(id_col).alias("id"), "sh",
@@ -448,8 +324,8 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
             for b in range(4)])).alias("bk")) \
         .select("id", "sh", F.col("bk.band").alias("band"),
                 F.col("bk.bh").alias("bh"))
-    return (_bucketed_self_join(banded, ["band", "bh"],
-                                chunk_target=chunk_target)
+    return (bucketed_join(banded, keys=["band", "bh"],
+                          chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
             .select(F.col("id_a"), F.col("id_b"),
                     F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
@@ -516,9 +392,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # the salted join needs no counting pass of its own (bn_col)
     cold = materialize(pruned.select(id_col, "tok", "sz", "df"),
                        reliable)
-    return (_bucketed_self_join(cold.toDF("id", "tok", "sz", "__bn__"),
-                                ["tok"], chunk_target=chunk_target,
-                                bn_col="__bn__")
+    return (bucketed_join(cold.toDF("id", "tok", "sz", "__bn__"),
+                          keys=["tok"], chunk_target=chunk_target,
+                          bn_col="__bn__")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b", "sz_a", "sz_b")
             .agg(F.count(F.lit(1)).alias("inter"))
@@ -553,8 +429,8 @@ def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     # per reference
     v = materialize(v)
     dot = _dot_wide("v_a", "v_b", dim)
-    return (_bucketed_self_join(v.toDF("id", "bk", "v", "n"), ["bk"],
-                                chunk_target=chunk_target)
+    return (bucketed_join(v.toDF("id", "bk", "v", "n"), keys=["bk"],
+                          chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
             .withColumn("cosine", dot / (F.col("n_a") * F.col("n_b")))
             .filter(F.col("cosine") >= threshold)
@@ -601,79 +477,6 @@ def span_dedup(df: DataFrame, text_col: str = "text",
                 .alias(text_col)))
 
 
-def _bucketed_join(left: DataFrame, right: DataFrame, keys: list[str],
-                   id_col: str = "id",
-                   chunk_target: int = 2048) -> DataFrame:
-    """Two-relation analog of _bucketed_self_join: ``left ⋈_keys
-    right`` (payload columns suffixed ``_a``/``_b``) with hot buckets
-    chunked on BOTH sides so a degenerate key's |A_k|·|B_k| output
-    spreads across (nca·ncb) cells instead of one task.
-
-    Unlike the self-join, each side needs the OTHER side's chunk count
-    to replicate against, so the per-key sizes are tiny aggregates
-    (map-side combine → ~one row per key) joined into a hot-key table
-    that broadcasts back to both sides; keys where both sides fit in
-    one chunk pay only two extra int columns.
-
-    Deliberately NOT pinned to sort-merge (contrast
-    _bucketed_self_join): the asymmetric use (small new batch × huge
-    corpus) wins precisely because the small side broadcasts and the
-    corpus never shuffles. Under a broadcast plan each corpus row
-    emits at most ``chunk_target`` pairs per matching a-chunk, and the
-    quadratic output follows the STREAM side's input layout — evenly
-    spread for hash/arrival-ordered inputs; a corpus FILE-CLUSTERED on
-    the join key concentrates it, and such inputs should be
-    pre-repartitioned by the caller (or the join will be sort-merge
-    anyway once both sides exceed the broadcast threshold)."""
-    la = [c for c in left.columns if c not in keys]
-    rb = [c for c in right.columns if c not in keys]
-    lc = left.groupBy(*keys).agg(F.count(F.lit(1)).alias("__ln__"))
-    rc = right.groupBy(*keys).agg(F.count(F.lit(1)).alias("__rn__"))
-    # materialized + empty short-circuit (r15, the _bucketed_self_join
-    # fix): the lazy hot subtree hung under BOTH replicated sides, so
-    # the two sizing aggregates ran twice each; and when no key is hot
-    # on either side — the common case — the chunking is the identity
-    # and the plain join is bit-identical with none of the salting
-    # machinery in the plan.
-    from ..checkpoint import materialize, release
-    hot = materialize(
-        lc.join(rc, on=list(keys))
-        .select(*keys,
-                F.ceil(F.col("__ln__") / F.lit(float(chunk_target)))
-                .cast("int").alias("__nca__"),
-                F.ceil(F.col("__rn__") / F.lit(float(chunk_target)))
-                .cast("int").alias("__ncb__"))
-        .filter((F.col("__nca__") > 1) | (F.col("__ncb__") > 1)))
-    if hot.isEmpty():
-        release(hot)
-        lp = left.select(
-            *keys, *[F.col(c).alias(c + "_a") for c in la])
-        rp = right.select(
-            *keys, *[F.col(c).alias(c + "_b") for c in rb])
-        return lp.join(rp, on=list(keys))
-    l2 = (left.join(F.broadcast(hot), on=list(keys), how="left")
-          .withColumn("__nca__", F.coalesce(F.col("__nca__"), F.lit(1)))
-          .withColumn("__ncb__", F.coalesce(F.col("__ncb__"), F.lit(1)))
-          .withColumn("__ca__", F.pmod(F.xxhash64(F.col(id_col)),
-                                       F.col("__nca__")).cast("int")))
-    r2 = (right.join(F.broadcast(hot), on=list(keys), how="left")
-          .withColumn("__nca__", F.coalesce(F.col("__nca__"), F.lit(1)))
-          .withColumn("__ncb__", F.coalesce(F.col("__ncb__"), F.lit(1)))
-          .withColumn("__cb__", F.pmod(F.xxhash64(F.col(id_col)),
-                                       F.col("__ncb__")).cast("int")))
-    lrep = l2.select(
-        *keys, *[F.col(c).alias(c + "_a") for c in la],
-        F.col("__ca__"),
-        F.explode(F.sequence(F.lit(0), F.col("__ncb__") - 1))
-        .alias("__cb__"))
-    rrep = r2.select(
-        *keys, *[F.col(c).alias(c + "_b") for c in rb],
-        F.explode(F.sequence(F.lit(0), F.col("__nca__") - 1))
-        .alias("__ca__"), F.col("__cb__"))
-    return (lrep.join(rrep, on=list(keys) + ["__ca__", "__cb__"])
-            .drop("__ca__", "__cb__"))
-
-
 def exact_dedup_against(new_df: DataFrame, corpus_df: DataFrame,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
@@ -718,8 +521,8 @@ def minhash_pairs_against(new_df: DataFrame, corpus_df: DataFrame,
     rpb = num_hashes // bands
     bn = _band_rows(sig_n, id_col, bands, rpb, portable)
     bc = _band_rows(sig_c, id_col, bands, rpb, portable)
-    cand = (_bucketed_join(bn, bc, ["band", "bh"],
-                           chunk_target=chunk_target)
+    cand = (bucketed_join(bn, bc, ["band", "bh"],
+                          chunk_target=chunk_target)
             .select(F.col("id_a").alias("new_id"),
                     F.col("id_b").alias("corpus_id"))
             .distinct())
@@ -821,7 +624,7 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
 
     The cluster step is what makes this scale: candidate pairs are
     generated per-cell (k cells bound the quadratic blowup to
-    Σ|cell|²), with hot cells salted by _bucketed_self_join exactly
+    Σ|cell|²), with hot cells salted by skew.bucketed_join exactly
     like the LSH path. Choose k ~ N/target_cell_size; the drop rule is
     the same greedy lower-id policy the other dedup families use, so
     results are deterministic and engine-reproducible (exact-double
@@ -853,9 +656,9 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
     # the survivor anti-join — cut it once so the corpus-scale scan +
     # argmin doesn't run twice (the ngram_jaccard shared-index rule)
     v = materialize(v)
-    cand = (_bucketed_self_join(
+    cand = (bucketed_join(
                 v.filter(F.col("n") > 0).toDF("id", "cell", "v", "n"),
-                ["cell"], chunk_target=chunk_target)
+                keys=["cell"], chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
             .withColumn("cosine",
                         _dot_wide("v_a", "v_b", dim)
@@ -892,7 +695,7 @@ def item_jaccard_pairs(rel: DataFrame, id_col: str, item_col: str,
     set sizes and item document-frequencies as window counts, items in
     > max_df_ratio of ids pruned before the join (quadratic fanout, no
     signal; Jaccard still uses UNPRUNED sizes), hot posting lists
-    salted by _bucketed_self_join. Pass ``nids=`` if the entity count
+    salted by skew.bucketed_join. Pass ``nids=`` if the entity count
     is known, else it is computed in-plan as a broadcast scalar.
     """
     pairs_in = rel.select(F.col(id_col), F.col(item_col).alias("tok")) \
@@ -912,9 +715,9 @@ def item_jaccard_pairs(rel: DataFrame, id_col: str, item_col: str,
     # ngram_jaccard_pairs rationale) — no counting pass in the join
     cold = materialize(pruned.select(id_col, "tok", "sz", "df"),
                        reliable)
-    return (_bucketed_self_join(cold.toDF("id", "tok", "sz", "__bn__"),
-                                ["tok"], chunk_target=chunk_target,
-                                bn_col="__bn__")
+    return (bucketed_join(cold.toDF("id", "tok", "sz", "__bn__"),
+                          keys=["tok"], chunk_target=chunk_target,
+                          bn_col="__bn__")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b", "sz_a", "sz_b")
             .agg(F.count(F.lit(1)).alias("inter"))

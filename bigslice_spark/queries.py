@@ -2486,17 +2486,22 @@ def pipeline_end2end(spark, sf_dir):
       ON e.event_type = s.event_type
 """)
 def op_salted_join(spark, sf_dir):
-    """Salted skew join (operators/skew.py): events has only 5 event
-    types — every key is hot. The salted join spreads each over 8
-    reducers; output must equal the plain join (the oracle). The merge
-    hint forces a real shuffle join so the pattern is exercised even at
-    test scale where broadcast would hide it."""
-    from .operators.skew import salted_join
+    """Input-skew join (operators/skew.py bucketed_join): events has
+    only 5 event types, so every key is hot. chunk_target=32 makes all
+    five hot from sf0.001 (about 190-210 rows each) upward: each type's
+    events are split over ceil(n/32) chunks by event_id, and the
+    per-type stats row, which has no event_id and so is never split, is
+    copied to each chunk. Output must equal the plain join (the
+    oracle)."""
+    from .operators.skew import bucketed_join
     _, t = _s(spark, sf_dir)
     ev = t["events"].select("event_id", "event_type")
     stats = (t["events"].groupBy("event_type")
              .agg(F.count(F.lit(1)).alias("type_n")))
-    return salted_join(ev, stats.hint("merge"), ["event_type"], nsalts=8)
+    return (bucketed_join(ev, stats, ["event_type"], id_col="event_id",
+                          chunk_target=32)
+            .select(F.col("event_id_a").alias("event_id"), "event_type",
+                    F.col("type_n_b").alias("type_n")))
 
 
 @query("scalar_functions", """

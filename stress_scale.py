@@ -346,7 +346,7 @@ def ivf_cell_scaling(spark, t):
 
 
 def hot_bucket_stress(spark):
-    """Adversarial degenerate-LSH-bucket curve for _bucketed_self_join:
+    """Adversarial degenerate-LSH-bucket curve for skew.bucketed_join:
     ONE planted bucket of B identical-signature rows (B = 500·amp,
     far past chunk_target) amid 10k cold buckets. Reports wall, total
     pair rows (B² is inherent to the semantics), and the per-task
@@ -357,7 +357,7 @@ def hot_bucket_stress(spark):
     the counterfactual a fixed-key join produces — one task owning
     all B² rows."""
     import pyspark.sql.functions as F
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    from bigslice_spark.operators.skew import bucketed_join
 
     def rel(b):
         hot = spark.range(b).select(F.lit(-1).alias("bk"),
@@ -368,8 +368,8 @@ def hot_bucket_stress(spark):
         return hot.unionByName(cold).localCheckpoint()
 
     def measure(name, amp, r, chunk_target):
-        pairs = _bucketed_self_join(r, ["bk"], id_col="id",
-                                    chunk_target=chunk_target)
+        pairs = bucketed_join(r, keys=["bk"], id_col="id",
+                              chunk_target=chunk_target)
         t0 = time.time()
         per_task = (pairs.groupBy(F.spark_partition_id().alias("pid"))
                     .agg(F.count(F.lit(1)).alias("n"))

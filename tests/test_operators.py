@@ -408,11 +408,13 @@ def test_lsh_no_bucket_cap(spark):
 
 
 def test_bucketed_self_join_salting_exact(spark):
-    """_bucketed_self_join with salting engaged (chunk_target below the
-    hot-bucket size) must produce EXACTLY the rows of the naive self-join
-    — every ordered pair lands in one (c_a, c_b) cell, none duplicated,
-    none lost — on a mix of hot, warm, and singleton buckets."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    """bucketed_join's self-join with salting engaged (chunk_target
+    below the hot-bucket size) must produce EXACTLY the rows of the
+    naive self-join — every ordered pair lands in one (ca, cb) cell,
+    none duplicated, none lost — on a mix of hot, warm, and singleton
+    buckets."""
+    from bigslice_spark.operators.skew import bucketed_join
+    from bigslice_spark.plans import explain_str
     rows = ([(i, "hot") for i in range(137)]
             + [(1000 + i, "warm") for i in range(23)]
             + [(2000, "solo")])
@@ -420,13 +422,29 @@ def test_bucketed_self_join_salting_exact(spark):
     naive = (rel.toDF("id_a", "bk")
              .join(rel.toDF("id_b", "bk"), on="bk")
              .select("bk", "id_a", "id_b"))
-    salted = _bucketed_self_join(rel, ["bk"], chunk_target=10) \
+    salted = bucketed_join(rel, keys=["bk"], chunk_target=10) \
         .select("bk", "id_a", "id_b")
     want = sorted(map(tuple, naive.collect()))
     got = sorted(map(tuple, salted.collect()))
     assert got == want
     # and salting must actually be in the plan (cell columns join keys)
-    assert "__ci__" in salted._jdf.queryExecution().analyzed().toString()
+    assert "__ca__" in explain_str(salted)
+
+
+def test_bucketed_join_rejects_bad_chunk_target(spark):
+    """chunk_target < 1 raises ValueError at the call, in both modes,
+    before any Spark job runs (0 used to fail late inside a task with
+    a division by zero; a negative value failed in the self-join and
+    silently disabled salting in the two-relation join)."""
+    from bigslice_spark.operators.skew import bucketed_join
+    rel = spark.createDataFrame([(1, "k")], "id long, bk string")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for right in (None, rel):
+        for bad in (0, -3):
+            with pytest.raises(ValueError, match="chunk_target"):
+                bucketed_join(rel, right, ["bk"], chunk_target=bad)
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def test_lsh_degenerate_bucket_salted_pairs_exact(spark):
@@ -1159,11 +1177,10 @@ def test_text_operator_edge_inputs(spark):
 
 
 def test_bucketed_join_two_sided_exact(spark):
-    """_bucketed_join with both sides chunked (chunk_target below both
+    """bucketed_join with both sides chunked (chunk_target below both
     hot sizes) == the naive inner join, on asymmetric hot/warm/solo
     buckets and keys present on only one side."""
-    import pyspark.sql.functions as F
-    from bigslice_spark.operators.dedup import _bucketed_join
+    from bigslice_spark.operators.skew import bucketed_join
     lrows = ([(i, "hot") for i in range(57)]
              + [(100 + i, "warm") for i in range(4)]
              + [(200, "lonly")])
@@ -1173,7 +1190,7 @@ def test_bucketed_join_two_sided_exact(spark):
     right = spark.createDataFrame(rrows, "id long, bk string")
     naive = (left.toDF("ida", "bk").join(right.toDF("idb", "bk"), "bk")
              .select("bk", "ida", "idb"))
-    got = (_bucketed_join(left, right, ["bk"], chunk_target=8)
+    got = (bucketed_join(left, right, ["bk"], chunk_target=8)
            .select("bk", "id_a", "id_b"))
     assert sorted(map(tuple, naive.collect())) \
         == sorted(map(tuple, got.collect()))

@@ -94,6 +94,16 @@ def test_salted_agg_two_stages(spark, sf_dir):
     assert 1 <= n <= 2, f"expected 1-2 exchanges, got {n}"
 
 
+def test_salted_join_takes_chunk_grid(spark, sf_dir):
+    """op_salted_join's chunk_target makes every event type hot at
+    test scale, so its plan carries the chunk explode; the salt is a
+    hash of event_id, never the layout-sensitive
+    monotonically_increasing_id."""
+    txt = explain_str(QUERIES["op_salted_join"](spark, sf_dir))
+    assert "Generate" in txt, txt[:1500]
+    assert "monotonically_increasing_id" not in txt, txt[:1500]
+
+
 def test_tpch_remainder_plan_shapes(spark, sf_dir):
     """Ceilings for the adapted q7-q22 batch: dims always broadcast,
     never a cartesian product, and the exchange count stays at the

@@ -13,14 +13,14 @@ def _rows(df, cols):
 
 
 def test_bucketed_self_join_matches_plain_join_with_hot_bucket(spark):
-    """The agg+hot-broadcast bucket sizing (r14) must emit exactly the
-    pair multiset of rel ⋈_keys rel — including a bucket larger than
-    chunk_target, which exercises nc > 1 chunk spreading."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    """The agg+hot-broadcast bucket sizing must emit exactly the pair
+    multiset of rel ⋈_keys rel — including a bucket larger than
+    chunk_target, which exercises more than one chunk per key."""
+    from bigslice_spark.operators.skew import bucketed_join
     rows = [(i, "hot" if i < 40 else f"k{i % 7}") for i in range(80)]
     rel = spark.createDataFrame(rows, "id long, bk string")
     got = _rows(
-        _bucketed_self_join(rel, ["bk"], chunk_target=8),
+        bucketed_join(rel, keys=["bk"], chunk_target=8),
         ["bk", "id_a", "id_b"])
     want = _rows(
         rel.toDF("id_a", "bk").join(rel.toDF("id_b", "bk"), on="bk"),
@@ -31,16 +31,16 @@ def test_bucketed_self_join_matches_plain_join_with_hot_bucket(spark):
 def test_bucketed_self_join_bn_col_matches_window_count(spark):
     """bn_col (a precomputed per-row bucket size, the ngram/item df
     path) must salt identically to counting inside the join."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    from bigslice_spark.operators.skew import bucketed_join
     rows = [(i, "hot" if i < 30 else f"k{i % 5}") for i in range(60)]
     rel = spark.createDataFrame(rows, "id long, bk string")
     ann = rel.withColumn(
         "bn", F.count(F.lit(1)).over(W.partitionBy("bk")))
-    got = _rows(
-        _bucketed_self_join(ann, ["bk"], chunk_target=8, bn_col="bn"),
-        ["bk", "id_a", "id_b"])
+    out = bucketed_join(ann, keys=["bk"], chunk_target=8, bn_col="bn")
+    assert "bn_a" not in out.columns
+    got = _rows(out, ["bk", "id_a", "id_b"])
     want = _rows(
-        _bucketed_self_join(rel, ["bk"], chunk_target=8),
+        bucketed_join(rel, keys=["bk"], chunk_target=8),
         ["bk", "id_a", "id_b"])
     assert got == want
 

@@ -12,14 +12,14 @@ def _rows(df, cols):
 
 
 def test_bucketed_self_join_empty_hot_short_circuit(spark):
-    """r15: when no bucket exceeds chunk_target, the salted self-join
+    """When no bucket exceeds chunk_target, the salted self-join
     short-circuits to the plain merge-pinned join — the output must be
     exactly rel ⋈_keys rel and the plan must carry NO salting
-    machinery (no broadcast join, no explode)."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    machinery (no cell columns, no explode)."""
+    from bigslice_spark.operators.skew import bucketed_join
     rows = [(i, f"k{i % 7}") for i in range(60)]   # max bucket 9 < 16
     rel = spark.createDataFrame(rows, "id long, bk string")
-    out = _bucketed_self_join(rel, ["bk"], chunk_target=16)
+    out = bucketed_join(rel, keys=["bk"], chunk_target=16)
     got = _rows(out, ["bk", "id_a", "id_b"])
     want = _rows(
         rel.toDF("id_a", "bk").join(rel.toDF("id_b", "bk"), on="bk"),
@@ -27,16 +27,16 @@ def test_bucketed_self_join_empty_hot_short_circuit(spark):
     assert got == want
     plan = explain_str(out)
     assert "SortMergeJoin" in plan
-    assert "__nc__" not in plan and "Generate" not in plan, plan[:1500]
+    assert "__ca__" not in plan and "Generate" not in plan, plan[:1500]
 
 
 def test_bucketed_self_join_hot_path_still_salts(spark):
-    """r15: a genuinely hot bucket must still take the salted path
-    (explode machinery present) and emit the exact pair multiset."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    """A genuinely hot bucket must still take the salted path (explode
+    machinery present) and emit the exact pair multiset."""
+    from bigslice_spark.operators.skew import bucketed_join
     rows = [(i, "hot" if i < 40 else f"k{i % 7}") for i in range(80)]
     rel = spark.createDataFrame(rows, "id long, bk string")
-    out = _bucketed_self_join(rel, ["bk"], chunk_target=8)
+    out = bucketed_join(rel, keys=["bk"], chunk_target=8)
     got = _rows(out, ["bk", "id_a", "id_b"])
     want = _rows(
         rel.toDF("id_a", "bk").join(rel.toDF("id_b", "bk"), on="bk"),
@@ -46,57 +46,62 @@ def test_bucketed_self_join_hot_path_still_salts(spark):
 
 
 def test_bucketed_join_empty_hot_short_circuit(spark):
-    """r15: the two-relation analog — no hot key on either side means
-    the plain join, bit-identical output."""
-    from bigslice_spark.operators.dedup import _bucketed_join
+    """The two-relation analog — no hot key on either side means the
+    plain join: identical output, and no salting in the plan."""
+    from bigslice_spark.operators.skew import bucketed_join
     left = spark.createDataFrame(
         [(i, f"k{i % 5}") for i in range(40)], "id long, bk string")
     right = spark.createDataFrame(
         [(i + 100, f"k{i % 5}") for i in range(35)],
         "id long, bk string")
-    out = _bucketed_join(left, right, ["bk"], chunk_target=16)
+    out = bucketed_join(left, right, ["bk"], chunk_target=16)
     got = _rows(out, ["bk", "id_a", "id_b"])
     want = _rows(
         left.toDF("id_a", "bk").join(right.toDF("id_b", "bk"),
                                      on="bk"),
         ["bk", "id_a", "id_b"])
     assert got == want
+    plan = explain_str(out)
+    assert "__ca__" not in plan and "Generate" not in plan, plan[:1500]
 
 
 def test_bucketed_join_hot_path_matches_plain(spark):
-    """r15: hot key on one side — salted two-relation join still
-    emits the exact pair multiset."""
-    from bigslice_spark.operators.dedup import _bucketed_join
+    """Hot key on both sides — the salted two-relation join still
+    emits the exact pair multiset, with the chunk explode in the
+    plan."""
+    from bigslice_spark.operators.skew import bucketed_join
     left = spark.createDataFrame(
         [(i, "hot" if i < 30 else f"k{i % 5}") for i in range(50)],
         "id long, bk string")
     right = spark.createDataFrame(
         [(i + 100, "hot" if i < 20 else f"k{i % 5}")
          for i in range(40)], "id long, bk string")
-    out = _bucketed_join(left, right, ["bk"], chunk_target=8)
+    out = bucketed_join(left, right, ["bk"], chunk_target=8)
     got = _rows(out, ["bk", "id_a", "id_b"])
     want = _rows(
         left.toDF("id_a", "bk").join(right.toDF("id_b", "bk"),
                                      on="bk"),
         ["bk", "id_a", "id_b"])
     assert got == want
+    assert "Generate" in explain_str(out)
 
 
 def test_bucketed_self_join_null_bn_col_coalesces(spark):
-    """ADVICE r14: a NULL bucket-size value must not silently drop
-    rows — __nc__ coalesces to 1 and the pair survives."""
-    from bigslice_spark.operators.dedup import _bucketed_self_join
+    """A NULL bucket-size value must not silently drop rows — it
+    counts as one chunk and the pair survives."""
+    from bigslice_spark.operators.skew import bucketed_join
     rel = spark.createDataFrame(
         [(1, "a", None), (2, "a", None), (3, "b", 1)],
         "id long, bk string, bn int")
-    got = _rows(_bucketed_self_join(rel, ["bk"], chunk_target=8,
-                                    bn_col="bn"),
+    got = _rows(bucketed_join(rel, keys=["bk"], chunk_target=8,
+                              bn_col="bn"),
                 ["bk", "id_a", "id_b"])
     want = _rows(
         rel.select("id", "bk").toDF("id_a", "bk")
         .join(rel.select("id", "bk").toDF("id_b", "bk"), on="bk"),
         ["bk", "id_a", "id_b"])
     assert got == want
+
 
 def test_trigram_full_build_matches_transform_shape(spark):
     """r15: the regexp_extract_all full postings build must equal the
